@@ -46,12 +46,16 @@ def _split_pages(spark, n=300):
     return pages, p1, p2
 
 
-def test_incremental_matches_batch(spark, tmp_root):
+@pytest.mark.parametrize("use_substring_pass", [False, True])
+def test_incremental_matches_batch(spark, tmp_root, use_substring_pass):
+    from dataclasses import replace
+
+    cfg = replace(CFG, use_substring_pass=use_substring_pass)
     pages, p1, p2 = _split_pages(spark)
     cat = Catalog(os.path.join(tmp_root, "src"))
     cat.append("pages", p1)
 
-    inc = IncrementalDedup(spark, cat, os.path.join(tmp_root, "work"), CFG)
+    inc = IncrementalDedup(spark, cat, os.path.join(tmp_root, "work"), cfg)
     m1 = inc.process("pages")
     assert m1 is not None and m1["source_snapshot"] == 1
 
@@ -63,7 +67,7 @@ def test_incremental_matches_batch(spark, tmp_root):
     # url (incremental doc ids are keyed (url, snapshot), batch by url)
     urls = inc.work.read(spark, "docs").select("doc_id", "url")
     inc_cl = inc.clusters().join(urls, "doc_id")
-    batch = dedup(pages, CFG)
+    batch = dedup(pages, cfg)
 
     def groups(rows):
         by = {}
@@ -74,6 +78,9 @@ def test_incremental_matches_batch(spark, tmp_root):
     gi = groups([(r["url"], r["cluster_id"]) for r in inc_cl.collect()])
     gb = groups([(r["url"], r["cluster_id"]) for r in batch.clusters.select("url", "cluster_id").collect()])
     assert gi == gb
+    if use_substring_pass:  # the substring path really ran
+        edges = inc.work.read(spark, "edges")
+        assert edges.where(F.col("kind") == "substring").count() > 0
 
 
 def test_process_is_idempotent(spark, tmp_root):

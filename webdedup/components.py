@@ -30,10 +30,13 @@ Two execution paths, chosen by a size gate on the symmetric edge count
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 
 from pyspark.sql import DataFrame, Observation, functions as F
+
+_log = logging.getLogger(__name__)
 
 
 class _ThreadLocalStats:
@@ -92,9 +95,15 @@ def _free_ckpt(df: DataFrame) -> None:
     """
     try:
         rdd = df._jdf.queryExecution().analyzed().rdd()
+    except Exception:
+        _log.warning("checkpoint release: no RDD behind the plan", exc_info=True)
+        return
+    # independent steps: a failed block unpersist must not keep the
+    # checkpoint files on disk, nor the reverse
+    try:
         rdd.unpersist(False)
     except Exception:
-        return  # session gone / plan shape changed — best-effort
+        _log.warning("checkpoint release: unpersist failed", exc_info=True)
     try:
         f = rdd.getCheckpointFile()  # scala Option; empty for localCheckpoint
         if f is not None and f.isDefined():
@@ -103,7 +112,7 @@ def _free_ckpt(df: DataFrame) -> None:
             fs = p.getFileSystem(sc._jsc.hadoopConfiguration())
             fs.delete(p, True)
     except Exception:
-        pass  # non-RDD plan / fs unreachable — best-effort
+        _log.warning("checkpoint release: file delete failed", exc_info=True)
 
 
 def _driver_labels(sym_pdf):

@@ -3,13 +3,17 @@
 North-rule requirement: "checkpoint-resumable per Iceberg snapshot with
 per-partition lineage and counters". Each source snapshot is processed
 exactly once (the set-oriented ``partial_fit``, reference S2 /
-sparseMatrix.h:187-231 — append, never reallocate):
+sparseMatrix.h:187-231 — append, never reallocate). Steps 1-4 are the
+shared dedup core, :func:`webdedup.pipeline.dedup_delta`, run against the
+stored reps, features and texts:
 
 1. new docs → fingerprint; exact dups of *known* texts short-circuit to an
    exact edge (compute-once-per-unique-row, inverseIndex.cpp:442-464)
 2. new unique docs → featurize → appended to the features store
-3. LSH/SimHash candidates restricted to pairs touching >= 1 new doc
-   (old-old pairs were found when "old" was new)
+3. LSH band, SimHash block and substring-fingerprint candidates, all
+   new × all: the hot-bucket census spans the whole store, but only new
+   rows join on the left, so every pair has >= 1 new side (old-old pairs
+   were found when "old" was new) and the join work follows the delta
 4. verify → edges appended; connected components re-resolved over the full
    edge store (cheap: edges ~ O(dups), not O(corpus))
 5. state.json advanced ONLY after outputs land; a crash mid-run leaves
@@ -25,17 +29,23 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from webdedup import lsh, verify
 from webdedup.catalog import Catalog
 from webdedup.components import connected_components
 from webdedup.config import DedupConfig
-from webdedup.joins import scoped_persists, semi_join_ids, track_persist
-from webdedup.metrics import PipelineMetrics, partition_lineage
-from webdedup.signatures import featurize
-from webdedup.substring import substring_pairs
+from webdedup.joins import scoped_persists, track_persist
+from webdedup.metrics import partition_lineage
+from webdedup.pipeline import FEATURE_COLS, KnownStore, dedup_delta
+from webdedup.signatures import make_substring_fp_udf
+
+# The stage functions run inside pipeline.dedup_delta. Their names stay
+# bound here as well, because per-module instrumentation (perfbench's
+# tracer) wraps them on every engine module that names them.
+from webdedup.joins import semi_join_ids  # noqa: E402, F401
+from webdedup.signatures import featurize  # noqa: E402, F401
+from webdedup.substring import substring_pairs  # noqa: E402, F401
 
 DOCS = "docs"          # (doc_id, url, fingerprint, src_snapshot)
-FEATURES = "features"  # (doc_id, text, shingles, bands, simhash, n_shingles, src_snapshot)
+FEATURES = "features"  # (doc_id, text, shingles, bands, simhash, n_shingles, substr_fps, src_snapshot)
 EDGES = "edges"        # (a, b, jaccard, kind, src_snapshot)
 
 
@@ -122,11 +132,9 @@ class IncrementalDedup:
             return None
         self._rollback_partial(st)
 
-        mx = PipelineMetrics()
         new = self.source.read_incremental(
             self.spark, table, after=last, upto=cur, snapshot_col="src_snapshot"
         )
-        new = mx.observe(new, "pages_in")
         # doc identity = one CRAWL EVENT of a url, keyed (url, snapshot):
         # a recrawled url whose text changed must not collide with its old
         # row (a bare xxhash64(url) id would accumulate two different
@@ -139,136 +147,66 @@ class IncrementalDedup:
         # the same url into one id — the corruption this keying prevents).
         new = new.withColumn(
             "doc_id", F.xxhash64("url", F.col("src_snapshot").cast("string"))
-        ).withColumn("fingerprint", F.md5(F.col(text_col).cast("binary")))
-        track_persist(new)
-
-        # -- exact-dup split against known + intra-batch fingerprints
-        if self.work.exists(DOCS):
-            known = (
-                self.work.read(self.spark, DOCS)
-                .groupBy("fingerprint")
-                .agg(F.min("doc_id").alias("rep_id"))
-            )
-        else:
-            known = None
-        # narrow-column dedup bookkeeping: texts never shuffle — the rep
-        # resolution joins move (fingerprint, doc_id) only, and unique new
-        # texts are carved from the cached `new` scan by broadcast semi-join
-        nids = new.select("fingerprint", "doc_id")
-        batch_reps = nids.groupBy("fingerprint").agg(F.min("doc_id").alias("batch_rep"))
-        w = nids.join(batch_reps, "fingerprint")
-        if known is not None:
-            w = w.join(known, "fingerprint", "left")
-        else:
-            w = w.withColumn("rep_id", F.lit(None).cast("long"))
-        w = w.withColumn("rep", F.coalesce("rep_id", "batch_rep"))
-        uniq_ids = w.where(F.col("doc_id") == F.col("rep")).select("doc_id")
-        # size-gated broadcast semi-join: broadcasts the batch-sized id set,
-        # degrades to a shuffle join above cfg.broadcast_id_limit
-        # footer-derived size bounds: |uniq_ids| <= batch rows, and the
-        # verify/substring id sets are bounded by the full features corpus
-        # (store + batch) — skips the blocking gating counts when they
-        # already clear the broadcast limit (see webdedup.joins)
-        n_batch = self.source.row_count(table, after=last, upto=cur)
-        n_corpus = n_batch + (
-            self.work.row_count(DOCS) if self.work.exists(DOCS) else 0
-        )
-        uniq_new = semi_join_ids(
-            new, uniq_ids, "doc_id", cfg.broadcast_id_limit, known_max=n_batch
-        ).select("doc_id", text_col)
-        exact_edges = w.where(F.col("doc_id") != F.col("rep")).select(
-            F.col("rep").alias("a"),
-            F.col("doc_id").alias("b"),
-            F.lit(1.0).alias("jaccard"),
-            F.lit("exact").alias("kind"),
         )
 
-        # -- featurize new unique docs (substr_fps fused in: one Arrow pass)
-        feat_new = featurize(
-            uniq_new, cfg, text_col=text_col, with_substring_fps=True
-        ).select(
-            "doc_id", text_col, "shingles", "bands", "simhash", "n_shingles",
-            "substr_fps",
-        )
-        feat_new = mx.observe(
-            feat_new,
-            "featurize",
-            F.count(F.lit(1)).alias("pages_shingled"),
-            F.sum("n_shingles").alias("signatures_emitted"),
-        )
-        track_persist(feat_new)
-
-        # -- candidates: at least one side new
+        # -- the known side: stored reps, features and texts.
         # Stored substr_fps are TRUSTED only when the store's manifest meta
         # records the exact fps config (k, window, pass enabled) in effect
         # now (ADVICE r3 medium): featurize always writes the column — empty
         # arrays when the pass is off, values frozen at write-time k/window —
         # so column presence alone would silently miss substring duplicates
         # against previously stored docs after a config change. On any
-        # mismatch (or a pre-meta store) the per-pass UDF recomputes
-        # fingerprints for the whole corpus under the current config.
+        # mismatch (or a pre-meta store) the fingerprint UDF recomputes the
+        # stored docs' fps under the current config.
         fps_cfg = {
             "substr_k": cfg.substring_k,
             "substr_window": cfg.substring_window,
             "enabled": bool(cfg.use_substring_pass),
         }
-        feat_all = feat_new
+        known = None
         store_has_col = True
-        fps_trusted = True
         if self.work.exists(FEATURES):
             stored = self.work.read(self.spark, FEATURES)
             store_has_col = "substr_fps" in stored.columns
-            stored_cfg = self.work.meta(FEATURES).get("substr_fps_cfg")
-            fps_trusted = store_has_col and stored_cfg == fps_cfg
-            cols = ["doc_id", text_col, "shingles", "bands", "simhash",
-                    "n_shingles"]
-            if store_has_col:
-                cols.append("substr_fps")
-            feat_all = stored.select(*cols).unionByName(
-                feat_new.select(*cols)
+            stored = stored.select(
+                text_col, *(c for c in FEATURE_COLS if c in stored.columns)
             )
-        track_persist(feat_all)
-
-        cand = self._new_touching_pairs(feat_new, feat_all, cfg)
-        cand = mx.observe(cand, "candidates", F.count(F.lit(1)).alias("candidate_pairs"))
-        near = verify.verified_pairs(
-            cand, feat_all, cfg.jaccard_threshold, cfg.broadcast_id_limit,
-            known_max=n_corpus,
-        ).withColumn("kind", F.lit("near"))
-        if cfg.use_substring_pass:
-            new_ids = feat_new.select("doc_id")
-            if fps_trusted:
-                sub = substring_pairs(
-                    feat_all.select("doc_id", text_col, "substr_fps"), cfg,
-                    text_col=text_col, known_max=n_corpus,
-                    fps_col="substr_fps",
-                )
-            else:
-                sub = substring_pairs(
-                    feat_all.select("doc_id", text_col), cfg,
-                    text_col=text_col, known_max=n_corpus,
-                )
-            sub = (
-                sub.join(new_ids.withColumnRenamed("doc_id", "a"), "a", "left_semi")
-                .unionByName(
-                    sub.join(new_ids.withColumnRenamed("doc_id", "b"), "b", "left_semi")
-                )
-                .dropDuplicates(["a", "b"])
-                .withColumn("kind", F.lit("substring"))
+            fps_trusted = (
+                store_has_col
+                and self.work.meta(FEATURES).get("substr_fps_cfg") == fps_cfg
             )
-            near = near.unionByName(sub).dropDuplicates(["a", "b"])
-        edges_new = near.unionByName(exact_edges)
-        edges_new = mx.observe(
-            edges_new, "verified", F.count(F.lit(1)).alias("verified_dups")
-        )
+            if cfg.use_substring_pass and not fps_trusted:
+                stored = stored.withColumn(
+                    "substr_fps", make_substring_fp_udf(cfg)(text_col)
+                )
+            known = KnownStore(
+                reps=self.work.read(self.spark, DOCS)
+                .groupBy("fingerprint")
+                .agg(F.min("doc_id").alias("rep_id")),
+                # read by every candidate stage, verify and the texts side
+                features=track_persist(stored),
+                n_docs=self.work.row_count(DOCS),
+            )
+        # footer-derived size bound: |any new id set| <= batch rows
+        n_batch = self.source.row_count(table, after=last, upto=cur)
+        delta = dedup_delta(new, cfg, n_batch, known=known, text_col=text_col)
+        mx = delta.metrics
 
         # -- append to stores (forces execution → observations harvestable)
         snap_ids = {}
         snap_ids[DOCS] = self.work.append(
             DOCS,
-            new.select("doc_id", "url", "fingerprint", "src_snapshot"),
+            mx.observe(delta.docs, "pages_in").select(
+                "doc_id", "url", "fingerprint", "src_snapshot"
+            ),
         )
-        feat_store = feat_new.withColumn("src_snapshot", F.lit(cur))
+        # the features store keeps each row's text (later deltas verify
+        # substring candidates against it); the core's cache is text-free
+        feat_store = (
+            delta.features.join(delta.docs.select("doc_id", text_col), "doc_id")
+            .select("doc_id", text_col, *FEATURE_COLS[1:])
+            .withColumn("src_snapshot", F.lit(cur))
+        )
         if not store_has_col:
             # keep a pre-fused-featurize store's parquet schema uniform
             feat_store = feat_store.drop("substr_fps")
@@ -287,7 +225,7 @@ class IncrementalDedup:
             FEATURES, feat_store, meta_update=fps_meta
         )
         snap_ids[EDGES] = self.work.append(
-            EDGES, edges_new.withColumn("src_snapshot", F.lit(cur))
+            EDGES, delta.edges.withColumn("src_snapshot", F.lit(cur))
         )
 
         # -- resolve clusters over the full graph
@@ -313,45 +251,6 @@ class IncrementalDedup:
         self._commit_state(st)
 
         return metrics
-
-    def _new_touching_pairs(
-        self, feat_new: DataFrame, feat_all: DataFrame, cfg: DedupConfig
-    ) -> DataFrame:
-        """LSH + SimHash candidate pairs with >= 1 new-doc side.
-
-        Join new band rows against all band rows (both orientations folded
-        into a < b), with the same hot-bucket tombstone census as the
-        batch path.
-        """
-        rows_all = lsh.explode_bands(feat_all)
-        ok_all = lsh.surviving_buckets(rows_all, cfg).select(
-            "band", "band_hash", "doc_id"
-        )
-        new_ids = feat_new.select("doc_id")
-        rows_new = ok_all.join(new_ids, "doc_id", "left_semi")
-        l, r = rows_new.alias("l"), ok_all.alias("r")
-        pairs = (
-            l.join(
-                r,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.band_hash") == F.col("r.band_hash"))
-                & (F.col("l.doc_id") != F.col("r.doc_id")),
-            )
-            .select(
-                F.least("l.doc_id", "r.doc_id").alias("a"),
-                F.greatest("l.doc_id", "r.doc_id").alias("b"),
-            )
-            .dropDuplicates(["a", "b"])
-        )
-        if cfg.use_simhash:
-            sims = lsh.simhash_candidate_pairs(feat_all, cfg)
-            sims_new = sims.join(
-                new_ids.withColumnRenamed("doc_id", "a"), "a", "left_semi"
-            ).unionByName(
-                sims.join(new_ids.withColumnRenamed("doc_id", "b"), "b", "left_semi")
-            )
-            pairs = pairs.unionByName(sims_new).dropDuplicates(["a", "b"])
-        return pairs
 
     def clusters(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.work_root, "clusters"))

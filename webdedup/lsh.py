@@ -4,7 +4,9 @@ Spark re-expression of the reference's inverse index build + collision query
 (InverseIndex::fit, inverseIndex.cpp:430-499; InverseIndex::kneighbors
 collision counting, inverseIndex.cpp:530-561). The bucket table is never
 materialized as a map — it IS the shuffle: posexplode(bands) → groupBy/join
-on (band, band_hash).
+on (band, band_hash). :func:`bucket_pairs` is that census + hot-kill +
+equi-join step once, shared by the band, SimHash-block and
+substring-fingerprint candidate sources.
 """
 
 from __future__ import annotations
@@ -14,50 +16,94 @@ from pyspark.sql import DataFrame, functions as F
 from webdedup.config import DedupConfig
 
 
+def new_flag(df: DataFrame) -> list:
+    """``["is_new"]`` when ``df`` flags its rows new/known, else ``[]``."""
+    return ["is_new"] if "is_new" in df.columns else []
+
+
 def explode_bands(feat: DataFrame) -> DataFrame:
-    """(doc_id, bands) → (doc_id, band, band_hash) — the LSH bucket rows."""
+    """(doc_id, bands) → (doc_id, band, band_hash) — the LSH bucket rows
+    (plus ``is_new`` when ``feat`` carries it)."""
     return feat.select(
-        "doc_id", F.posexplode("bands").alias("band", "band_hash")
+        "doc_id", *new_flag(feat), F.posexplode("bands").alias("band", "band_hash")
     )
 
 
-def bucket_sizes(bucket_rows: DataFrame) -> DataFrame:
-    """Per-(band, band_hash) member count as ONE two-phase hash aggregate.
+def drop_hot(rows: DataFrame, keys: list, max_bin_size: int) -> DataFrame:
+    """``rows`` minus every bucket of ``keys`` holding >= max_bin_size rows.
 
-    Hot buckets (boilerplate shingles shared by ~30% of the web) cannot
-    skew a COUNT: Spark's map-side partial aggregation emits at most one
-    partial row per mapper per key, so the reducer owning a hot key merges
-    |mappers| counters, not |members| rows — the partial agg IS the salt.
-    (An explicit (band, hash, salt) pre-aggregation — this function's r1-r5
-    shape, then named ``bucket_sizes_salted`` with a ``cfg.salt_buckets``
-    fan-out knob — added a full extra exchange + AQE stage for a combine
-    the map side already performs; even under partial-agg hash-table
-    overflow the spill path still emits partial counts, never raw rows.
-    Removed in r6: one less shuffle per census at identical output, and
-    the explicit salt knob went with it.)
+    Reference parity: a bucket reaching max_bin_size is dropped ENTIRELY
+    (tombstone semantics, inverseIndexStorageUnorderedMap.cpp:70-81) —
+    filter on the full count, never a limit/truncate. The census is ONE
+    two-phase hash aggregate: map-side partial aggregation emits at most
+    one partial row per mapper per key, so the reducer owning a hot key
+    merges |mappers| counters, not |members| rows (the partial agg IS the
+    salt; the r1-r5 explicit salted pre-aggregation cost a full extra
+    exchange for the same combine). The hot list is tiny by construction ⇒
+    broadcast anti-join, no second shuffle of the exploded table. Size-1
+    buckets need no explicit prune: they produce no join matches (the
+    reference's prune(), :162-187, falls out free).
     """
-    return (
-        bucket_rows.groupBy("band", "band_hash")
+    hot = (
+        rows.groupBy(*keys)
         .agg(F.count("*").alias("bucket_size"))
+        .where(F.col("bucket_size") >= F.lit(max_bin_size))
+        .select(*keys)
     )
+    return rows.join(F.broadcast(hot), keys, "left_anti")
 
 
 def surviving_buckets(bucket_rows: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Bucket rows with hot buckets killed.
+    """LSH band bucket rows with hot buckets killed (:func:`drop_hot`)."""
+    return drop_hot(bucket_rows, ["band", "band_hash"], cfg.max_bin_size)
 
-    Reference parity: a bucket reaching max_bin_size is dropped ENTIRELY
-    (tombstone semantics, inverseIndexStorageUnorderedMap.cpp:70-81) — filter
-    on the full count, never a limit/truncate. The hot list is tiny by
-    construction ⇒ broadcast anti-join (no second shuffle of the exploded
-    band table). Size-1 buckets need no explicit prune: they produce no
-    self-join matches (the reference's prune(), :162-187, falls out free).
+
+def bucket_pairs(
+    rows: DataFrame, keys: list, max_bin_size: int, *cols
+) -> DataFrame:
+    """(a, b, *cols) doc pairs sharing a surviving bucket, a < b.
+
+    The one "explode keys → census → kill hot buckets → equi-join" step
+    behind every dedup candidate source (LSH bands, SimHash block keys,
+    substring fingerprints). ``rows`` holds (doc_id, *keys) and optionally
+    a boolean ``is_new``; ``cols`` are extra output expressions over the
+    ``l``/``r`` join sides (e.g. the SimHash distance).
+
+    The census spans ALL rows, so a bucket is hot by its full store-wide
+    size; only NEW rows join on the left, against all rows on the right,
+    under ``NOT r.is_new OR l.doc_id < r.doc_id``: a pair with one new
+    side comes out once (new on the left), a new-new pair once (smaller
+    id on the left), an old-old pair never — it was found when "old" was
+    new. Every pair leaves in ONE orientation per shared bucket.
+
+    Without ``is_new`` every row is new: the flag is a literal added after
+    any upstream persist, so the optimizer folds the condition to
+    ``l.doc_id < r.doc_id`` and the left filter away — the plain
+    self-join.
+
+    Partitioning by key happens through the join's OWN shuffle —
+    deliberately NOT an explicit ``repartition()`` first: a user-origin
+    exchange is ineligible for AQE's skew-join rule, so a near-cap hot
+    bucket (the power-law web reality the tombstone's threshold
+    intentionally lets through) would land on ONE task. Measured on a
+    40k-row hot bucket: with repartition() the join stage runs at the
+    configured width with one task reading the whole bucket; without it
+    AQE splits the skewed partition ~4x (66 tasks vs 16). The
+    ENSURE_REQUIREMENTS shuffle clusters by exactly the same keys, so
+    co-location is unchanged (tests/test_pipeline.py skew gate).
     """
-    hot = (
-        bucket_sizes(bucket_rows)
-        .where(F.col("bucket_size") >= F.lit(cfg.max_bin_size))
-        .select("band", "band_hash")
+    if "is_new" not in rows.columns:
+        rows = rows.withColumn("is_new", F.lit(True))
+    ok = drop_hot(rows, keys, max_bin_size)
+    l, r = ok.where("is_new").alias("l"), ok.alias("r")
+    cond = ~F.col("r.is_new") | (F.col("l.doc_id") < F.col("r.doc_id"))
+    for k in keys:
+        cond = (F.col(f"l.{k}") == F.col(f"r.{k}")) & cond
+    return l.join(r, cond).select(
+        F.least("l.doc_id", "r.doc_id").alias("a"),
+        F.greatest("l.doc_id", "r.doc_id").alias("b"),
+        *cols,
     )
-    return bucket_rows.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
 
 
 def candidate_pairs(
@@ -70,34 +116,14 @@ def candidate_pairs(
     over the union (the pipeline) — one less exchange, identical final
     pair set.
 
-    The equi-self-join on (band, band_hash) is the reference's collision
-    lookup (inverseIndex.cpp:530-561) done set-at-a-time; a < b ordering
-    halves the join output and dropDuplicates collapses multi-band
-    collisions before the (expensive) verify stage.
-
-    Partitioning by signature band happens through the join's OWN shuffle
-    on (band, band_hash) — deliberately NOT an explicit ``repartition()``
-    first: a user-origin exchange is ineligible for AQE's skew-join rule,
-    so a near-cap hot bucket (the power-law web reality the tombstone's
-    threshold intentionally lets through) would land on ONE task. Measured
-    on a 40k-row hot bucket: with repartition() the join stage runs at the
-    configured width with one task reading the whole bucket; without it AQE
-    splits the skewed partition ~4x (66 tasks vs 16). The
-    ENSURE_REQUIREMENTS shuffle clusters by exactly the same keys, so
-    co-location is unchanged (tests/test_pipeline.py skew gate).
+    The equi-join on (band, band_hash) is the reference's collision
+    lookup (inverseIndex.cpp:530-561) done set-at-a-time
+    (:func:`bucket_pairs`: new × all when ``feat`` carries ``is_new``);
+    dropDuplicates collapses multi-band collisions before the (expensive)
+    verify stage.
     """
-    rows = explode_bands(feat)
-    ok = surviving_buckets(rows, cfg).select("band", "band_hash", "doc_id")
-    left = ok.alias("l")
-    right = ok.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+    pairs = bucket_pairs(
+        explode_bands(feat), ["band", "band_hash"], cfg.max_bin_size
     )
     return pairs.dropDuplicates(["a", "b"]) if dedupe else pairs
 
@@ -178,34 +204,25 @@ def simhash_candidate_pairs(
 ) -> DataFrame:
     """Distinct (a, b) pairs with SimHash hamming distance <= threshold.
 
-    Candidates from block-triple key tables (see _simhash_tables), exact
-    bit_count(xor) filter JVM-side (no Python in the hot path).
-    ``dedupe=False`` as in :func:`candidate_pairs`.
+    Candidates from block-triple key tables (see _simhash_tables) joined
+    by :func:`bucket_pairs` (hot keys — degenerate fingerprints, e.g.
+    near-empty docs — tombstoned), exact bit_count(xor) filter JVM-side
+    (no Python in the hot path). ``dedupe=False`` as in
+    :func:`candidate_pairs`.
     """
     t = cfg.simhash_hamming_threshold
     keys = _simhash_key_col(t)
-    rows = feat.select("doc_id", "simhash").withColumn(
+    flag = new_flag(feat)
+    rows = feat.select("doc_id", "simhash", *flag).withColumn(
         "_k", F.explode(keys)
-    ).select("doc_id", "simhash", F.col("_k.tbl").alias("tbl"), F.col("_k.key").alias("key"))
-    # hot-key tombstone (degenerate fingerprints, e.g. near-empty docs)
-    hot = (
-        rows.groupBy("tbl", "key")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= F.lit(cfg.max_bin_size))
-        .select("tbl", "key")
+    ).select(
+        "doc_id", "simhash", *flag,
+        F.col("_k.tbl").alias("tbl"), F.col("_k.key").alias("key"),
     )
-    rows = rows.join(F.broadcast(hot), ["tbl", "key"], "left_anti")
-    l, r = rows.alias("l"), rows.alias("r")
+    dist = F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash")))
     out = (
-        l.join(
-            r,
-            (F.col("l.tbl") == F.col("r.tbl"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .where(
-            F.bit_count(F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))) <= F.lit(t)
-        )
-        .select(F.col("l.doc_id").alias("a"), F.col("r.doc_id").alias("b"))
+        bucket_pairs(rows, ["tbl", "key"], cfg.max_bin_size, dist.alias("_d"))
+        .where(F.col("_d") <= F.lit(t))
+        .select("a", "b")
     )
     return out.dropDuplicates(["a", "b"]) if dedupe else out

@@ -1,13 +1,30 @@
 """End-to-end near-duplicate detection + clustering pipeline.
 
-read → exact-dup collapse → featurize (shingle/MinHash/SimHash) → LSH bands
-(salted, hot-bucket-killed) → exact Jaccard verify → [substring pass] →
-connected components → (url, doc_id, cluster_id).
+One dedup core, :func:`dedup_delta`, runs stages 0-5 for every caller:
+
+0. exact-duplicate split — new docs collapse onto one representative per
+   text, preferring a KNOWN representative (an earlier run's doc) when
+   the text is already stored;
+1. featurize the new unique docs (shingle/MinHash/SimHash/substring fps,
+   one Arrow pass);
+2. candidates — LSH bands ∪ SimHash blocks, new × all
+   (:func:`webdedup.lsh.bucket_pairs`);
+3. exact Jaccard verify;
+4. [substring pass] — winnowed fingerprints, new × all, contains-verify;
+5. exact edges from every non-representative new doc to its rep.
+
+Batch :func:`dedup` is one delta against an EMPTY store followed by
+connected components → (url, doc_id, cluster_id);
+:class:`webdedup.incremental.IncrementalDedup` passes its stored reps,
+features and texts as ``known`` and resolves components over the store.
+With no store every row is new and each candidate join is the plain
+``a < b`` self-join.
 
 This is the set-oriented equivalent of the reference's fused
 ``fit_kneighbors(X, X)`` self-query (nearestNeighbors_PythonInterface.cpp:
 43-56) followed by graph clustering (cluster/minHashDBSCAN.py), re-expressed
-as one Spark DAG per stage. Exact duplicates are collapsed BEFORE hashing
+as one Spark DAG per stage; the ``known`` store is its ``partial_fit``
+(append, never rebuild). Exact duplicates are collapsed BEFORE hashing
 and fanned back in afterwards — the same compute-once-per-unique-row
 semantics as the reference's signature store (inverseIndex.cpp:442-464,
 :571-584).
@@ -15,25 +32,9 @@ semantics as the reference's signature store (inverseIndex.cpp:442-464,
 
 from __future__ import annotations
 
-import os
-import time
-
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def _profiler():
-    """WEBDEDUP_PROFILE=1 → force-materialize each stage and print timings
-    (distorts total wall time slightly; diagnosis only)."""
-    if not os.environ.get("WEBDEDUP_PROFILE"):
-        return lambda name, df: df
-    def probe(name, df):
-        t0 = time.perf_counter()
-        n = df.count()
-        print(f"[profile] {name}: {time.perf_counter()-t0:.1f}s rows={n}", flush=True)
-        return df
-    return probe
 
 from webdedup import lsh, verify
 from webdedup.components import connected_components
@@ -44,8 +45,13 @@ from webdedup.joins import (
     semi_join_ids,
     track_persist,
 )
+from webdedup.metrics import PipelineMetrics
 from webdedup.signatures import featurize
 from webdedup.substring import substring_pairs
+
+#: the feature columns the core caches (text-free; the incremental
+#: features store adds the text)
+FEATURE_COLS = ["doc_id", "shingles", "bands", "simhash", "n_shingles", "substr_fps"]
 
 
 @dataclass
@@ -92,6 +98,26 @@ def _recompute_is_expensive(df: DataFrame) -> bool:
     )
 
 
+@dataclass
+class KnownStore:
+    """Docs deduplicated by earlier runs — the ``known`` side of a delta."""
+
+    reps: DataFrame      # (fingerprint, rep_id): one representative per stored text
+    features: DataFrame  # FEATURE_COLS + text; substr_fps is read only with
+                         # the substring pass on, and must then match cfg
+    n_docs: int          # upper bound on the stored doc count
+
+
+@dataclass
+class Delta:
+    """What :func:`dedup_delta` adds: lazy frames over the run's caches."""
+
+    docs: DataFrame      # the new docs + fingerprint (cached)
+    features: DataFrame  # FEATURE_COLS of the new unique docs (cached)
+    edges: DataFrame     # (a, b, jaccard, kind), every edge with >= 1 new side
+    metrics: PipelineMetrics
+
+
 def dedup(
     pages: DataFrame,
     cfg: DedupConfig | None = None,
@@ -129,7 +155,6 @@ def _dedup_impl(
     id_col: str | None,
 ) -> DedupResult:
     has_url = "url" in pages.columns
-    probe = _profiler()
 
     # One cheap corpus count up front (parquet footer metadata when pages is
     # a plain scan) bounds EVERY id set below — rep ids, candidate-pair ids,
@@ -144,7 +169,6 @@ def _dedup_impl(
         track_persist(pages)
     n_docs = pages.count()
 
-    # ---- stage 0: ids + exact-duplicate collapse (compute once per unique text)
     if id_col is not None:
         docs = pages.select(
             *(["url"] if has_url else []),
@@ -157,139 +181,12 @@ def _dedup_impl(
         docs = pages.select(*base_cols).withColumn(
             "doc_id", F.xxhash64(F.col(id_src))
         )
-    docs = docs.withColumn("fingerprint", F.md5(F.col(text_col).cast("binary")))
-    track_persist(docs)
-    # Narrow-column exact-dup collapse: the groupBy and every join below
-    # move only (fingerprint, doc_id) — the wide text column never shuffles.
-    # uniq is carved out of the cached docs scan with a size-gated semi-join
-    # on rep ids: broadcast below cfg.broadcast_id_limit (rep_ids is
-    # corpus-sized — one id per unique text — so an unconditional hint would
-    # OOM at 10^12 docs), shuffled semi-join above it (webdedup.joins).
-    ids = docs.select("fingerprint", "doc_id")
-    reps = ids.groupBy("fingerprint").agg(
-        F.min("doc_id").alias("rep_id"), F.count("*").alias("n_members")
-    )
-    rep_ids = reps.select(F.col("rep_id").alias("doc_id"))
-    uniq = semi_join_ids(
-        docs, rep_ids, "doc_id", cfg.broadcast_id_limit, known_max=n_docs
-    ).select("doc_id", text_col)
-    probe("uniq", uniq)
-
-    # ---- stage 1: featurize unique docs (Arrow-vectorized kernels)
-    # The fused UDF emits the substring fingerprints alongside the LSH
-    # features, so the corpus text crosses the Arrow boundary ONCE. The
-    # feat cache stays text-free: the substring verify pulls texts for
-    # candidate ids only, re-carving uniq from the already-persisted docs
-    # cache (a broadcast semi-join over cached narrow+text columns), so
-    # text bytes are cached once (docs), not twice.
-    feat_cols = ["doc_id", "shingles", "bands", "simhash", "n_shingles"]
-    if cfg.use_substring_pass:
-        feat_cols = feat_cols + ["substr_fps"]
-    feat = featurize(
-        uniq, cfg, text_col=text_col, with_substring_fps=True
-    ).select(*feat_cols)
-    # materialize the cache BEFORE any downstream action: the LSH / SimHash
-    # / verify / substring branches all consume feat inside one downstream
-    # job, and concurrently scheduled stages would otherwise race past the
-    # cold cache and re-run the featurize UDF once per branch. The fill
-    # job runs on a background thread so the DRIVER-side construction of
-    # that downstream DAG (py4j chatter, ~1.3 s of idle driver time
-    # otherwise serialized behind the count) overlaps it (guide §2.6).
-    # Everything until the join point is lazy ONLY below the broadcast
-    # gate: above cfg.broadcast_id_limit the verify/substring stages run
-    # eager semi-join gating counts (webdedup.joins), so there the thread
-    # is joined BEFORE stage 3 — the overlap win is forfeited exactly
-    # where gating job barriers already serialize the DAG, and no eager
-    # action can ever scan the still-cold feat cache concurrently with
-    # the fill. Profile mode counts per stage → stays sequential.
-    feat = track_persist(feat)
-    t0 = time.perf_counter()
-    fill_err: list = []
-    fill_thread = None
-    if os.environ.get("WEBDEDUP_PROFILE"):
-        feat.count()
-        print(f"[profile] featurize: {time.perf_counter()-t0:.1f}s", flush=True)
-    else:
-        from pyspark import InheritableThread
-
-        def _fill():
-            try:
-                feat.count()
-            except BaseException as e:  # noqa: BLE001 — re-raised at join
-                fill_err.append(e)
-
-        fill_thread = InheritableThread(target=_fill, daemon=True)
-        fill_thread.start()
-
-    def _join_fill():
-        nonlocal fill_thread
-        if fill_thread is not None:
-            fill_thread.join()
-            fill_thread = None
-            if fill_err:
-                raise fill_err[0]
-
-    if n_docs > cfg.broadcast_id_limit:
-        _join_fill()
-
-    # ---- stage 2: candidate pairs (MinHash LSH bands + SimHash blocks).
-    # Per-branch multi-band dedupe is skipped when the union below collapses
-    # everything anyway (dedupe once, not three times — two fewer exchanges)
-    cand = lsh.candidate_pairs(feat, cfg, dedupe=not cfg.use_simhash)
-    probe("lsh_candidates", cand)
-    if cfg.use_simhash:
-        sim = probe(
-            "simhash_candidates",
-            lsh.simhash_candidate_pairs(feat, cfg, dedupe=False),
-        )
-        cand = cand.union(sim).dropDuplicates(["a", "b"])
-
-    # ---- stage 3: exact Jaccard verify
-    near = verify.verified_pairs(
-        cand, feat, cfg.jaccard_threshold, cfg.broadcast_id_limit,
-        known_max=n_docs,
-    ).withColumn("kind", F.lit("near"))
-    probe("verify", near)
-
-    # ---- stage 4: exact-substring pass (optional)
-    if cfg.use_substring_pass:
-        # texts come straight off the cached docs scan: candidate pair ids
-        # are rep ids by construction, so the (wider) docs table joins
-        # identically to uniq — and skips re-deriving the uniq semi-join
-        # once per text side (two broadcast joins per dedup run)
-        sub = substring_pairs(
-            feat, cfg, text_col=text_col, known_max=n_docs,
-            fps_col="substr_fps", texts_df=docs,
-        ).withColumn("kind", F.lit("substring"))
-        probe("substring", sub)
-        all_pairs = near.unionByName(sub).dropDuplicates(["a", "b"])
-    else:
-        all_pairs = near
-
-    # ---- stage 5: fan exact duplicates back in as edges to their representative
-    exact_edges = (
-        ids.join(reps, "fingerprint")
-        .where(F.col("doc_id") != F.col("rep_id"))
-        .select(
-            F.col("rep_id").alias("a"),
-            F.col("doc_id").alias("b"),
-            F.lit(1.0).alias("jaccard"),
-            F.lit("exact").alias("kind"),
-        )
-    )
-    edges = all_pairs.unionByName(exact_edges)
-    track_persist(edges)
-    probe("edges", edges)
+    delta = dedup_delta(docs, cfg, n_docs, text_col=text_col)
+    docs, edges = delta.docs, track_persist(delta.edges)
 
     # ---- stage 6: connected components → cluster ids
-    # the feat cache MUST be materialized before CC triggers the first
-    # downstream action (see the fill-thread comment above)
-    _join_fill()
-    t0 = time.perf_counter()
     vertices = docs.select(F.col("doc_id").alias("id"))
     labels = connected_components(vertices, edges.select("a", "b"))
-    if os.environ.get("WEBDEDUP_PROFILE"):
-        print(f"[profile] cc: {time.perf_counter()-t0:.1f}s", flush=True)
 
     out_cols = [F.col("doc_id"), F.col("cluster_id")]
     if has_url:
@@ -302,7 +199,7 @@ def _dedup_impl(
 
     counters = {
         "pages": lambda: n_docs,
-        "unique_texts": lambda: uniq.count(),
+        "unique_texts": lambda: delta.features.count(),
         "verified_pairs": lambda: edges.count(),
         "clusters": lambda: clusters.select("cluster_id").distinct().count(),
         "duplicate_docs": lambda: clusters.groupBy("cluster_id")
@@ -313,6 +210,157 @@ def _dedup_impl(
         or 0,
     }
     return DedupResult(clusters=clusters, pairs=edges, counters=counters)
+
+
+def dedup_delta(
+    docs: DataFrame,
+    cfg: DedupConfig,
+    n_docs: int,
+    known: KnownStore | None = None,
+    text_col: str = "text",
+) -> Delta:
+    """Stages 0-5 for ``docs`` (doc_id, text, any extra columns) against
+    the optional ``known`` store; see the module docstring.
+
+    ``n_docs`` bounds the row count of ``docs`` (a footer count is
+    enough). Stage counters ``featurize``, ``candidates`` and ``verified``
+    are observed on frames the caller's actions materialize anyway (no
+    extra jobs) and harvested from ``Delta.metrics``. Caches go to the
+    active persist scope; the returned frames are lazy.
+    """
+    mx = PipelineMetrics()
+    n_all = n_docs + (known.n_docs if known is not None else 0)
+
+    # ---- stage 0: exact-duplicate split (compute once per unique text)
+    docs = track_persist(
+        docs.withColumn("fingerprint", F.md5(F.col(text_col).cast("binary")))
+    )
+    # Narrow-column collapse: the groupBy and every join below move only
+    # (fingerprint, doc_id) — the wide text column never shuffles. A known
+    # representative wins over this delta's own minimum, so a new doc whose
+    # text is already stored gets only an exact edge to the stored rep.
+    # uniq is carved out of the cached docs scan with a size-gated semi-join
+    # on rep ids: broadcast below cfg.broadcast_id_limit (rep_ids is
+    # corpus-sized — one id per unique text — so an unconditional hint would
+    # OOM at 10^12 docs), shuffled semi-join above it (webdedup.joins).
+    ids = docs.select("fingerprint", "doc_id")
+    reps = ids.groupBy("fingerprint").agg(F.min("doc_id").alias("rep_id"))
+    if known is not None:
+        reps = reps.join(
+            known.reps.withColumnRenamed("rep_id", "known_rep"), "fingerprint", "left"
+        ).select("fingerprint", F.coalesce("known_rep", "rep_id").alias("rep_id"))
+    rep_ids = reps.select(F.col("rep_id").alias("doc_id"))
+    uniq = semi_join_ids(
+        docs, rep_ids, "doc_id", cfg.broadcast_id_limit, known_max=n_docs
+    ).select("doc_id", text_col)
+    exact_edges = (
+        ids.join(reps, "fingerprint")
+        .where(F.col("doc_id") != F.col("rep_id"))
+        .select(
+            F.col("rep_id").alias("a"),
+            F.col("doc_id").alias("b"),
+            F.lit(1.0).alias("jaccard"),
+            F.lit("exact").alias("kind"),
+        )
+    )
+
+    # ---- stage 1: featurize new unique docs (Arrow-vectorized kernels)
+    # The fused UDF emits the substring fingerprints alongside the LSH
+    # features, so the text crosses the Arrow boundary ONCE. The feat cache
+    # stays text-free: the substring verify pulls texts for candidate ids
+    # only, from the already-cached docs (and the known store), so text
+    # bytes are cached once, not twice.
+    feat = featurize(
+        uniq, cfg, text_col=text_col, with_substring_fps=True
+    ).select(*FEATURE_COLS)
+    feat = track_persist(mx.observe(
+        feat,
+        "featurize",
+        F.count(F.lit(1)).alias("pages_shingled"),
+        F.sum("n_shingles").alias("signatures_emitted"),
+    ))
+    # Materialize the cache BEFORE any downstream action: the LSH / SimHash
+    # / verify / substring branches all consume feat inside one downstream
+    # job, and concurrently scheduled stages would otherwise race past the
+    # cold cache and re-run the featurize UDF once per branch. The fill
+    # job runs on a background thread so the DRIVER-side construction of
+    # the stage 2-5 DAG (py4j chatter, ~1.3 s of idle driver time
+    # otherwise serialized behind the count) overlaps it (guide §2.6); the
+    # thread is joined before this function returns, i.e. before the
+    # caller's first action. Stages 2-5 are lazy ONLY below the broadcast
+    # gate: above cfg.broadcast_id_limit the verify/substring stages run
+    # eager semi-join gating counts (webdedup.joins), so there the thread
+    # is joined BEFORE stage 2 — the overlap win is forfeited exactly
+    # where gating job barriers already serialize the DAG, and no eager
+    # action can ever scan the still-cold feat cache concurrently with
+    # the fill.
+    from pyspark import InheritableThread
+
+    fill_err: list = []
+
+    def _fill():
+        try:
+            feat.count()
+        except BaseException as e:  # noqa: BLE001 — re-raised at join
+            fill_err.append(e)
+
+    fill_thread = InheritableThread(target=_fill, daemon=True)
+    fill_thread.start()
+
+    def _join_fill():
+        fill_thread.join()
+        if fill_err:
+            raise fill_err[0]
+
+    if n_all > cfg.broadcast_id_limit:
+        _join_fill()
+
+    # new × all from here on: known rows join the candidate stages flagged
+    # is_new = false; with no store the flag is left off (all rows new)
+    feat_all, texts = feat, docs
+    if known is not None:
+        cols = [c for c in FEATURE_COLS if c != "substr_fps" or cfg.use_substring_pass]
+        feat_all = known.features.select(
+            *cols, F.lit(False).alias("is_new")
+        ).unionByName(feat.select(*cols, F.lit(True).alias("is_new")))
+        texts = docs.select("doc_id", text_col).unionByName(
+            known.features.select("doc_id", text_col)
+        )
+
+    # ---- stage 2: candidate pairs (MinHash LSH bands + SimHash blocks).
+    # Per-branch multi-band dedupe is skipped when the union below collapses
+    # everything anyway (dedupe once, not three times — two fewer exchanges)
+    cand = lsh.candidate_pairs(feat_all, cfg, dedupe=not cfg.use_simhash)
+    if cfg.use_simhash:
+        sim = lsh.simhash_candidate_pairs(feat_all, cfg, dedupe=False)
+        cand = cand.union(sim).dropDuplicates(["a", "b"])
+    cand = mx.observe(cand, "candidates", F.count(F.lit(1)).alias("candidate_pairs"))
+
+    # ---- stage 3: exact Jaccard verify
+    near = verify.verified_pairs(
+        cand, feat_all, cfg.jaccard_threshold, cfg.broadcast_id_limit,
+        known_max=n_all,
+    ).withColumn("kind", F.lit("near"))
+
+    # ---- stage 4: exact-substring pass (optional)
+    # texts come straight off the cached docs: candidate pair ids are rep
+    # ids by construction, so the (wider) docs table joins identically to
+    # uniq — and skips re-deriving the uniq semi-join once per text side
+    if cfg.use_substring_pass:
+        sub = substring_pairs(
+            feat_all, cfg, text_col=text_col, known_max=n_all,
+            fps_col="substr_fps", texts_df=texts,
+        ).withColumn("kind", F.lit("substring"))
+        near = near.unionByName(sub).dropDuplicates(["a", "b"])
+
+    # ---- stage 5: fan exact duplicates back in as edges to their representative
+    edges = mx.observe(
+        near.unionByName(exact_edges),
+        "verified",
+        F.count(F.lit(1)).alias("verified_dups"),
+    )
+    _join_fill()
+    return Delta(docs=docs, features=feat, edges=edges, metrics=mx)
 
 
 def collect_counters(result: DedupResult) -> dict:

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from webdedup.config import DedupConfig
 from webdedup.joins import semi_join_ids, track_persist
+from webdedup.lsh import bucket_pairs, new_flag
 from webdedup.signatures import make_substring_fp_udf
 
 
@@ -26,6 +27,8 @@ def substring_pairs(
     df needs (doc_id, text). Candidates: docs sharing >= min_shared winnowed
     fingerprints AND sharing a large fraction of the shorter doc's
     fingerprints; verify: exact `contains` on the raw text (JVM-side).
+    With a boolean ``is_new`` column only pairs with >= 1 new side are
+    generated (new × all, :func:`webdedup.lsh.bucket_pairs`).
 
     ``fps_col`` names a precomputed winnowed-fingerprint array column in
     ``df`` (the fused featurize UDF emits `substr_fps`); when given, the
@@ -37,46 +40,26 @@ def substring_pairs(
     persisted docs cache) so ``df`` need not carry — or cache — the text
     column at all when ``fps_col`` is set.
     """
+    flag = new_flag(df)
     if fps_col is not None:
-        rows = (
-            df.select("doc_id", F.col(fps_col).alias("_fps"))
-            .withColumn("n_fp", F.size("_fps"))
-            .where(F.col("n_fp") > 0)
-            .select("doc_id", "n_fp", F.explode("_fps").alias("fp"))
-        )
+        fps = df.select("doc_id", *flag, F.col(fps_col).alias("_fps"))
     else:
         fp_udf = make_substring_fp_udf(cfg)
-        rows = (
-            df.select("doc_id", F.col(text_col).alias("_t"))
-            .withColumn("_fps", fp_udf("_t"))
-            .withColumn("n_fp", F.size("_fps"))
-            .where(F.col("n_fp") > 0)
-            .select("doc_id", "n_fp", F.explode("_fps").alias("fp"))
-        )
-    # persist: the (Python-UDF or exploded-from-cache) fingerprints feed
-    # both the hot-count agg and the self-join — without it the upstream
-    # runs once per consumer
-    rows = track_persist(rows)
-    # kill hot fingerprints (boilerplate) — same tombstone idea as LSH
-    # buckets. The hot list is tiny ⇒ broadcast ANTI-join; joining against
-    # the non-hot list instead would shuffle the full exploded table twice.
-    hot = (
-        rows.groupBy("fp")
-        .agg(F.count("*").alias("c"))
-        .where(F.col("c") >= cfg.max_bin_size)
-        .select("fp")
+        fps = df.select("doc_id", *flag, fp_udf(text_col).alias("_fps"))
+    rows = (
+        fps.withColumn("n_fp", F.size("_fps"))
+        .where(F.col("n_fp") > 0)
+        .select("doc_id", *flag, "n_fp", F.explode("_fps").alias("fp"))
     )
-    rows = rows.join(F.broadcast(hot), "fp", "left_anti")
-
-    l, r = rows.alias("l"), rows.alias("r")
+    # persist: the (Python-UDF or exploded-from-cache) fingerprints feed
+    # both the hot-fingerprint census and the join — without it the
+    # upstream runs once per consumer. Hot fingerprints (boilerplate) are
+    # tombstoned like LSH buckets (lsh.bucket_pairs).
+    rows = track_persist(rows)
+    n_min = F.least("l.n_fp", "r.n_fp")
     shared = (
-        l.join(r, (F.col("l.fp") == F.col("r.fp")) & (F.col("l.doc_id") < F.col("r.doc_id")))
-        .groupBy(
-            F.col("l.doc_id").alias("a"),
-            F.col("r.doc_id").alias("b"),
-            F.col("l.n_fp").alias("n_a"),
-            F.col("r.n_fp").alias("n_b"),
-        )
+        bucket_pairs(rows, ["fp"], cfg.max_bin_size, n_min.alias("n_min"))
+        .groupBy("a", "b", "n_min")
         .agg(F.count("*").alias("n_shared"))
         # Containment gate compatible with the winnowing guarantee: if the
         # shorter text is contained in the longer, every fingerprint selected
@@ -91,10 +74,7 @@ def substring_pairs(
             F.col("n_shared")
             >= F.greatest(
                 F.lit(1),
-                F.least(
-                    F.ceil(0.8 * F.least("n_a", "n_b")),
-                    F.least("n_a", "n_b") - F.lit(4),
-                ),
+                F.least(F.ceil(0.8 * F.col("n_min")), F.col("n_min") - F.lit(4)),
             )
         )
         .select("a", "b")
